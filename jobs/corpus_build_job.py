@@ -42,7 +42,6 @@ already pins.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
@@ -155,6 +154,8 @@ def commit_run(spark, output_root: str, run_id: str, final_kept, retired,
     batch — exactly the mutation an append-only layout exists to
     avoid). Offsets are computed over the SCRUBBED text — the packing
     contract belongs to what training actually reads."""
+    from onnxocr_spark.sinks.ledger import write_sidecar
+
     data_dir = os.path.join(output_root, "data", f"run={run_id}")
     final_kept.write.mode("overwrite").parquet(data_dir)
     ledger_dir = os.path.join(output_root, "ledger", f"run={run_id}")
@@ -191,8 +192,6 @@ def commit_run(spark, output_root: str, run_id: str, final_kept, retired,
     n_dup = int(by_reason.get("dup", 0))
     n_quality = int(by_reason.get("quality", 0))
     n_contam = int(by_reason.get("contaminated", 0))
-    side_dir = os.path.join(output_root, "metrics", "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
     metrics = {
         "run_id": run_id,
         "policy": policy,
@@ -207,8 +206,7 @@ def commit_run(spark, output_root: str, run_id: str, final_kept, retired,
         "max_tokens": max_tokens,
         "wall_clock_unix": time.time(),
     }
-    with open(os.path.join(side_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(output_root, run_id, metrics)
     assert n_kept + n_dup + n_quality + n_contam == n_in
     return metrics
 

@@ -269,7 +269,9 @@ def incremental_corpus(docs, output_root: str, policy: str = "cc"):
     # this sees the founding run's policy even on a compacted root.
     import json
 
-    side_dir = os.path.join(output_root, "metrics", "_sidecars")
+    from onnxocr_spark.sinks.ledger import sidecar_dir
+
+    side_dir = sidecar_dir(output_root)
     if os.path.isdir(side_dir):
         prior = set()
         for fjs in os.listdir(side_dir):
@@ -477,10 +479,8 @@ def main(argv: list[str] | None = None) -> int:
 
     n_kept = spark.read.parquet(data_dir).count()
     n_retired = spark.read.parquet(retired_dir).count()
-    import json
+    from onnxocr_spark.sinks.ledger import write_sidecar
 
-    side_dir = os.path.join(args.output, "metrics", "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
     metrics = {
         "run_id": run_id,
         "policy": args.policy,
@@ -490,8 +490,7 @@ def main(argv: list[str] | None = None) -> int:
         "docs_retired": n_retired,
         "wall_clock_unix": time.time(),
     }
-    with open(os.path.join(side_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(args.output, run_id, metrics)
     print(f"committed dedup run {run_id}: {metrics}")
     assert n_kept + n_retired == n_in
     if owns_session:

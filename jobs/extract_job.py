@@ -5,7 +5,7 @@
         jobs/extract_job.py \\
         --input  <documents parquet/iceberg path> \\
         --output <output root> \\
-        [--run-id r42] [--resume] [--split-stages] [--salt-partitions N]
+        [--run-id r42] [--resume] [--split-stages] [--ocr-partitions N]
 
 Reads the interleaved documents table, skips already-committed doc_ids
 when --resume is given (ledger anti-join), runs the extraction, and
@@ -29,13 +29,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--resume", action="store_true")
     p.add_argument("--split-stages", action="store_true")
     p.add_argument("--ocr-partitions", type=int, default=None)
-    # force the per-image rec-batch contract on/off (default: auto —
-    # on exactly when the rec model is a real ONNX session). The
-    # cost-weighted balance knob (PipelineConfig.ocr_cost_col) is NOT
-    # exposed here: this job's media rows are span refs from
-    # explode_spans and carry no cost column to balance by.
-    p.add_argument("--rec-batch-by-image", choices=["auto", "true", "false"],
-                   default="auto")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -52,16 +45,11 @@ def main(argv: list[str] | None = None) -> int:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
         .config("spark.locality.wait", "0s")
-        .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "5000")
         .getOrCreate()
     )
     cfg = PipelineConfig(
         split_stages=args.split_stages,
         ocr_partitions=args.ocr_partitions,
-        rec_batch_by_image=(
-            None if args.rec_batch_by_image == "auto"
-            else args.rec_batch_by_image == "true"
-        ),
     )
     run_id = args.run_id or time.strftime("%Y%m%d_%H%M%S")
 

@@ -218,8 +218,9 @@ def commit_run(spark, output_root: str, run_id: str, kept, retired,
     leaves orphan dirs that contribute nothing; re-submitting the same
     run_id overwrites them, the idempotent contract). Shared by the
     spark-submit main() and the streaming sink."""
-    import json
     import os
+
+    from onnxocr_spark.sinks.ledger import write_sidecar
 
     data_dir = os.path.join(output_root, "data", f"run={run_id}")
     kept.write.mode("overwrite").parquet(data_dir)
@@ -239,8 +240,6 @@ def commit_run(spark, output_root: str, run_id: str, kept, retired,
     )
     n_kept = spark.read.parquet(data_dir).count()
     n_retired = spark.read.parquet(retired_dir).count()
-    side_dir = os.path.join(output_root, "metrics", "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
     metrics = {
         "run_id": run_id,
         "policy": "semantic",
@@ -251,8 +250,7 @@ def commit_run(spark, output_root: str, run_id: str, kept, retired,
         "docs_retired": n_retired,
         "wall_clock_unix": time.time(),
     }
-    with open(os.path.join(side_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    write_sidecar(output_root, run_id, metrics)
     assert n_kept + n_retired == n_in
     return metrics
 

@@ -35,37 +35,20 @@ class PipelineConfig:
     # --- recognition (utils.py:314-326, onnx_paddleocr.py:20) ---
     rec_image_shape: tuple[int, int, int] = (3, 48, 320)
     rec_batch_num: int = 6
-    use_space_char: bool = True
     drop_score: float = 0.5
 
     # --- spark-side knobs (no reference analog; scale levers) ---
-    # salt buckets for the skew-balancing repartition before the OCR stage
-    salt_buckets: int = 64
     # rows per Arrow batch entering mapInPandas (rows carry image bytes,
     # so keep this small; see SURVEY.md §4 "physical execution")
     arrow_max_records: int = 32
-    # partitions for the OCR stage; None → leave to AQE / input splits
+    # partitions for the OCR stage; None → 2 × defaultParallelism
     ocr_partitions: int | None = None
-    # per-item cost-hint column for the OCR stage balance: a numeric
-    # column, or a binary column (e.g. "media_bytes") meaning its byte
-    # size. When set, bins are cost-weighted (pipeline.
-    # cost_balanced_bins) instead of equal-count round-robin — opt-in
-    # because the bin join adds one exchange of the media rows.
-    ocr_cost_col: str | None = None
     # two-stage det/rec plan with crop-level redistribution (SURVEY §4.2);
-    # fused single-stage is the default (no pixels cross any shuffle)
+    # fused single-stage is the default (no pixels cross any shuffle).
+    # The split path's rec batching follows rec_model: per image for a
+    # real ONNX session, per crop for the stubs
+    # (two_stage.resolve_rec_batch_by_image)
     split_stages: bool = False
-    # split-stage rec batching contract. False: crops are round-robined
-    # at crop grain and batched per Arrow batch — best balance, but rec
-    # batch membership (and thus max_wh_ratio padding) differs from the
-    # reference's per-image batching; identical output is guaranteed
-    # only for pad-insensitive models (the stubs mask zero-pad columns).
-    # True: crops group per (doc_id, offset) via applyInPandas —
-    # bit-faithful to the fused/reference contract with real ONNX rec
-    # weights, at image-grain balance. None (default): resolve to True
-    # exactly when rec_model is a real ONNX session
-    # (two_stage.resolve_rec_batch_by_image).
-    rec_batch_by_image: bool | None = None
     # model identifiers resolved by the session registry
     det_model: str = "det_stub"
     cls_model: str = "cls_stub"

@@ -11,12 +11,12 @@ and where each shard's stream offset begins.
 
 The only global dependency is an ordered prefix sum of token counts —
 the textbook single-partition-window trap. This implementation is the
-same two-phase shape as pipeline.cost_balanced_bins (VERDICT r4
-item 4's DataFrame-native form): range-exchange sort on doc_id,
-per-partition token totals via ONE map-side-combined groupBy on
-spark_partition_id() (driver sees one BIGINT per partition), offsets
-broadcast back, and an Arrow-batched mapInPandas computes the local
-cumsum — no `.rdd`, no per-row Python, no single-partition window. At
+two-phase DataFrame-native form (VERDICT r4 item 4): range-exchange
+sort on doc_id, per-partition token totals via ONE map-side-combined
+groupBy on spark_partition_id() (driver sees one BIGINT per
+partition), offsets broadcast back, and an Arrow-batched mapInPandas
+computes the local cumsum — no `.rdd`, no per-row Python, no
+single-partition window. At
 1000 executors the sort is the only shuffle and it carries two BIGINTs
 per doc.
 
@@ -26,8 +26,7 @@ with a plain window-function cumsum — no float rule needed.
 
 The sorted frame is persisted between the two passes: the range
 partitioner samples its bounds, and the pid-keyed offsets are only
-meaningful if both passes see the SAME physical layout (same contract
-as cost_balanced_bins).
+meaningful if both passes see the SAME physical layout.
 """
 
 from __future__ import annotations

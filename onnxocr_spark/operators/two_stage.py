@@ -143,13 +143,13 @@ def make_recognize_image_group_fn(cfg: PipelineConfig):
 
 
 def resolve_rec_batch_by_image(cfg: PipelineConfig) -> bool:
-    """rec_batch_by_image=None (the default) resolves to True exactly
-    when the rec model is a real ONNX session — bit-faithful per-image
-    batching must not depend on a flag nobody sets (VERDICT r2 item 7).
-    The stub path keeps crop grain: pads are masked, so per-image
-    batching buys nothing and costs the finer balance."""
-    if cfg.rec_batch_by_image is not None:
-        return cfg.rec_batch_by_image
+    """Per-image rec batching exactly when the rec model is a real ONNX
+    session — bit-faithful per-image batching must not depend on a flag
+    nobody sets (VERDICT r2 item 7). Crop grain batches crops per Arrow
+    batch: best balance, but rec batch membership (and thus
+    max_wh_ratio padding) differs from the reference's per-image
+    batching, so it is exact only for pad-insensitive models — the
+    stubs, which mask zero-pad columns."""
     from onnxocr_spark.models.sessions import is_real_model
 
     return is_real_model(cfg.rec_model)

@@ -26,7 +26,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def _data_path(root: str) -> str:
@@ -37,6 +37,21 @@ def _ledger_path(root: str) -> str:
     return os.path.join(root, "ledger")
 
 
+def sidecar_dir(root: str) -> str:
+    """Where per-run JSON sidecars live: a leading-underscore subdir, so
+    a parquet scan of metrics/ never trips over them (Spark skips
+    _-prefixed paths)."""
+    return os.path.join(root, "metrics", "_sidecars")
+
+
+def write_sidecar(root: str, run_id: str, metrics: dict) -> None:
+    """Write one run's counters to metrics/_sidecars/run_<run_id>.json."""
+    side = sidecar_dir(root)
+    os.makedirs(side, exist_ok=True)
+    with open(os.path.join(side, f"run_{run_id}.json"), "w") as f:
+        json.dump(metrics, f)
+
+
 def write_with_ledger(
     out: DataFrame,
     root: str,
@@ -44,7 +59,11 @@ def write_with_ledger(
     source_path: str = "",
 ) -> dict:
     """Append one run's output + its ledger partition + a metrics
-    sidecar. Returns the metrics dict."""
+    sidecar. Returns the metrics dict.
+
+    After the data write the landed run is scanned exactly twice: once
+    for the ledger ids, once for the per-data-file metrics, whose write
+    also observes the run totals."""
     spark = out.sparkSession
     run_dir = os.path.join(_data_path(root), f"run={run_id}")
     # overwrite: retrying a crashed run_id replaces its partial dir
@@ -57,69 +76,65 @@ def write_with_ledger(
     ledger_dir = os.path.join(_ledger_path(root), f"run={run_id}")
     landed.select("doc_id").distinct().write.mode("overwrite").parquet(ledger_dir)
 
-    n_docs = landed.count()
-    n_spans, n_media, n_empty_media = (
-        landed.select(F.explode("spans").alias("s"))
-        .agg(
-            F.count("*"),
-            F.sum(F.when(F.col("s.kind") == "media", 1).otherwise(0)),
-            F.sum(
-                F.when(
-                    (F.col("s.kind") == "media") & (F.col("s.text") == ""), 1
-                ).otherwise(0)
-            ),
-        )
-        .first()
-    )
     # per-partition OCR metrics for this commit (north rule: every
     # partition commit records lineage + metrics): one row per landed
     # DATA FILE — input_file_name() is the on-disk partition identity
     # (spark_partition_id() on a re-read is the scan-split id, which
     # packs small files / splits large ones and so over/under-counts);
     # at Iceberg these rows fold into per-data-file column stats /
-    # snapshot summary entries
+    # snapshot summary entries. Counted per doc over the spans array
+    # (no explode); the run totals are observed on the same write.
+    def n_spans(pred=None):
+        arr = F.col("spans") if pred is None else F.filter("spans", pred)
+        return F.sum(F.greatest(F.size(arr), F.lit(0)))
+
+    def is_media(s):
+        return s["kind"] == "media"
+
+    counts = ("docs", "spans", "media_spans", "empty_media_spans")
     part_metrics = (
-        landed.withColumn("data_file", F.input_file_name())
-        .select("data_file", F.explode("spans").alias("s"))
-        .groupBy("data_file")
+        landed.groupBy(F.input_file_name().alias("data_file"))
         .agg(
-            F.count("*").alias("spans"),
-            F.sum(F.when(F.col("s.kind") == "media", 1).otherwise(0)).alias(
-                "media_spans"
+            F.count("*").alias("docs"),
+            n_spans().alias("spans"),
+            n_spans(is_media).alias("media_spans"),
+            n_spans(lambda s: is_media(s) & (s["text"] == "")).alias(
+                "empty_media_spans"
             ),
             F.sum(
-                F.when(
-                    (F.col("s.kind") == "media") & (F.col("s.text") == ""), 1
-                ).otherwise(0)
-            ).alias("empty_media_spans"),
-            F.sum(F.length("s.text")).alias("chars"),
+                F.aggregate(
+                    "spans", F.lit(0).cast("long"),
+                    lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
+                )
+            ).alias("chars"),
         )
         .withColumn("run_id", F.lit(run_id))
     )
+    totals = Observation()
     part_dir = os.path.join(root, "metrics", f"run={run_id}")
-    part_metrics.write.mode("overwrite").parquet(part_dir)
+    (
+        part_metrics.observe(
+            totals,
+            F.count("*").alias("n_partitions"),
+            *(F.sum(c).alias(c) for c in counts),
+        )
+        .write.mode("overwrite").parquet(part_dir)
+    )
+    observed = totals.get
 
     metrics = {
         "run_id": run_id,
         "source_path": source_path,
-        "docs": n_docs,
-        "spans": int(n_spans or 0),
-        "media_spans": int(n_media or 0),
-        "empty_media_spans": int(n_empty_media or 0),
-        "n_partitions": part_metrics.count(),
+        **{c: observed[c] or 0 for c in counts},
+        "n_partitions": observed["n_partitions"],
         "wall_clock_unix": time.time(),
     }
-    # JSON sidecars live under a leading-underscore subdir so a parquet
-    # scan of metrics/ never trips over them (Spark skips _-prefixed paths)
-    sidecar_dir = os.path.join(root, "metrics", "_sidecars")
-    os.makedirs(sidecar_dir, exist_ok=True)
-    _migrate_legacy_sidecars(root, sidecar_dir)
-    with open(os.path.join(sidecar_dir, f"run_{run_id}.json"), "w") as f:
-        json.dump(metrics, f)
+    _migrate_legacy_sidecars(root)
+    write_sidecar(root, run_id, metrics)
     return metrics
 
 
-def _migrate_legacy_sidecars(root: str, sidecar_dir: str) -> None:
+def _migrate_legacy_sidecars(root: str) -> None:
     """Roots written before the _sidecars layout have run_*.json directly
     under {root}/metrics/ — exactly where they break a parquet scan of
     the per-partition metrics. On every commit, move any such legacy
@@ -128,15 +143,14 @@ def _migrate_legacy_sidecars(root: str, sidecar_dir: str) -> None:
     ADVICE r3: new-layout readers work on old roots without a manual
     migration step."""
     metrics_dir = os.path.join(root, "metrics")
-    try:
-        names = os.listdir(metrics_dir)
-    except FileNotFoundError:
-        return
+    side = sidecar_dir(root)
+    os.makedirs(side, exist_ok=True)
+    names = os.listdir(metrics_dir)
     for name in names:
         if not (name.startswith("run_") and name.endswith(".json")):
             continue
         src = os.path.join(metrics_dir, name)
-        dst = os.path.join(sidecar_dir, name)
+        dst = os.path.join(side, name)
         if not os.path.isfile(src):
             continue
         if os.path.exists(dst):

@@ -1138,11 +1138,17 @@ def test_real_cls_onnx_contract():  # pragma: no cover - needs ORT wheel
     assert np.allclose(out.sum(axis=1), 1.0, atol=1e-3)
 
 
-def test_two_stage_rec_batch_by_image_equals_fused(spark, docs_df, extracted):
-    """rec_batch_by_image=True co-locates and batches crops per
+def test_two_stage_rec_batch_by_image_equals_fused(
+    spark, docs_df, extracted, monkeypatch
+):
+    """Per-image rec batching co-locates and batches crops per
     (doc_id, offset) — the fused/reference per-image batching contract
     (bit-faithful with real rec weights; ADVICE r1) — and must produce
-    the identical spans."""
+    the identical spans. It is resolved on the driver while the plan is
+    built, so forcing the resolver runs the grouped path on the stubs."""
+    from onnxocr_spark.operators import two_stage
+
+    monkeypatch.setattr(two_stage, "resolve_rec_batch_by_image", lambda cfg: True)
     def key(df):
         return {
             r.doc_id: [(s.kind, s.text, s.media_ref, s.offset)
@@ -1150,9 +1156,7 @@ def test_two_stage_rec_batch_by_image_equals_fused(spark, docs_df, extracted):
             for r in df.collect()
         }
 
-    split = run_extract(
-        docs_df, PipelineConfig(split_stages=True, rec_batch_by_image=True)
-    )
+    split = run_extract(docs_df, PipelineConfig(split_stages=True))
     assert key(split) == key(extracted)
 
     # group integrity (ADVICE r2): the per-image path must be a grouped
@@ -1167,8 +1171,7 @@ def test_two_stage_rec_batch_by_image_equals_fused(spark, docs_df, extracted):
 def test_rec_batch_by_image_defaults_to_real_model(spark):
     """The bit-faithful per-image batching contract must be ON whenever
     the rec session is a real ONNX model (VERDICT r2 item 7) — never
-    dependent on a flag nobody sets; stubs keep crop grain for balance;
-    an explicit setting always wins."""
+    dependent on a flag nobody sets; stubs keep crop grain for balance."""
     from onnxocr_spark.operators.two_stage import resolve_rec_batch_by_image
 
     assert resolve_rec_batch_by_image(PipelineConfig()) is False  # stub rec
@@ -1177,12 +1180,6 @@ def test_rec_batch_by_image_defaults_to_real_model(spark):
     ) is True
     assert resolve_rec_batch_by_image(
         PipelineConfig(rec_model="spark:rec.onnx")
-    ) is True
-    assert resolve_rec_batch_by_image(
-        PipelineConfig(rec_model="models/rec.onnx", rec_batch_by_image=False)
-    ) is False
-    assert resolve_rec_batch_by_image(
-        PipelineConfig(rec_batch_by_image=True)
     ) is True
 
 
